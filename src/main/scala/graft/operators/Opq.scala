@@ -309,7 +309,14 @@ object Opq {
     * codebooks and codes live in ROTATED r-dim space; the centroids
     * route in original space) plus the bounded r×d rotation basis that
     * maps a query into code space. */
-  case class IvfOpqIndex(basis: DataFrame, pq: Pq.IvfPqIndex)
+  case class IvfOpqIndex(basis: DataFrame, pq: Pq.IvfPqIndex) {
+    /** The basis collected pos-ascending ([[Pq.basisArrOf]]) on first
+      * use, at most once per index value — the r×d closure every
+      * rotated query and append ships, beside the PQ artifacts
+      * [[Pq.IvfPqIndex]] collects the same way. */
+    @transient private[graft] lazy val basisArr: Array[Array[Double]] =
+      Pq.basisArrOf(basis)
+  }
 
   /** Build the staged rotated index: the SAME deterministic pipeline
     * the one-shot [[knnIvfOpqOn]] runs — shared `ivfIndex` coarse
@@ -417,7 +424,7 @@ object Opq {
     val live = IndexManifest.currentOrFail(spark, root)
     val index = readIvfOpqIndex(spark, live)
     IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-      Pq.encodeAgainst(index.pq, newVectors, 0, index.basis), keep,
+      Pq.encodeAgainst(index.pq, newVectors, 0, index.basisArr), keep,
       requireEpoch = Some(IndexManifest.epochOf(spark, live)))
   }
 
@@ -471,7 +478,7 @@ object Opq {
   def appendIvfOpqIndex(spark: SparkSession, path: String,
                         newVectors: DataFrame): Long = {
     val index = readIvfOpqIndex(spark, path)
-    val newCodes = Pq.encodeAgainst(index.pq, newVectors, 0, index.basis)
+    val newCodes = Pq.encodeAgainst(index.pq, newVectors, 0, index.basisArr)
     val staged = Scratch.stageReuse(newCodes, "ivf_opq_append_codes")
     staged.repartition(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
@@ -495,7 +502,7 @@ object Opq {
                   queryIds: Seq[Long], k: Int = Similarity.K,
                   nprobe: Int = Similarity.IvfNProbe): DataFrame =
     Pq.queryIvfPq(index.pq, vectors, queryIds, k, nprobe,
-      basis = index.basis)
+      basis = index.basisArr)
 
   /** FILTERED top-k off the staged rotated index: the label rides the
     * code postings, the predicate evaluates inside the rotated ADC
@@ -506,7 +513,7 @@ object Opq {
                           nprobe: Int = Similarity.FilteredNProbe,
                           filterCol: String = "label"): DataFrame =
     Pq.queryIvfPqFiltered(index.pq, vectors, queryIds, k, nprobe,
-      filterCol, basis = index.basis)
+      filterCol, basis = index.basisArr)
 
   /** RADIUS search off the staged rotated index: admission is the ADC
     * cut adist ≤ 2(1−τ) in ROTATED space (the projection shrinks
@@ -519,7 +526,7 @@ object Opq {
                         tau: Double = Similarity.RadiusTau,
                         nprobe: Int = Similarity.IvfNProbe): DataFrame =
     Pq.queryIvfPqRadius(index.pq, vectors, queryIds, tau, nprobe,
-      basis = index.basis)
+      basis = index.basisArr)
 
   /** FILTERED RADIUS off the staged rotated index — the PQ
     * filtered-radius kernel through the rotation seam: same-label
@@ -535,7 +542,7 @@ object Opq {
                                 nprobe: Int = Similarity.FilteredNProbe,
                                 filterCol: String = "label"): DataFrame =
     Pq.queryIvfPqRadiusFiltered(index.pq, vectors, queryIds, tau, nprobe,
-      filterCol, basis = index.basis)
+      filterCol, basis = index.basisArr)
 
   /** Driver query (key `knn_ivf_opq_filtered`): the rotated filtered
     * serving path END TO END through the cross-engine gate — build

@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Divide, EvalMode, Literal, Multiply, NumericEvalContext}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructType}
 import graft.sources.Tables
-import graft.functions.{VectorOps => V}
+import graft.functions.{VecDot, VectorOps => V}
 
 /** Product-quantization ANN (key `knn_pq`) — the compressed-codes
   * scale path of the similarity tier (SURVEY §2.4), completing the
@@ -579,8 +582,27 @@ object Pq {
     * compressed form that IS the PQ memory story). The original
     * vector column is deliberately NOT part of the index: the exact
     * rerank reads it from the corpus by key over the bounded
-    * candidate sliver (Rerank·Q rows — a point-lookup join at scale). */
-  case class IvfPqIndex(centroids: DataFrame, codebooks: DataFrame, codes: DataFrame)
+    * candidate sliver (Rerank·Q rows — a point-lookup join at scale).
+    *
+    * Open once, query many: the two bounded tables every query and
+    * every append consumes are collected on first use, at most once per
+    * index value, and reused by every later call against it — an
+    * opened index pays only for each query's own work. */
+  case class IvfPqIndex(centroids: DataFrame, codebooks: DataFrame, codes: DataFrame) {
+    /** The C-row centroid table as (cell, ce, cn), sorted by cell. */
+    @transient private[operators] lazy val centroidRows
+        : Array[(Long, Array[Double], Double)] =
+      centroids.select(col("cell").cast("long"), col("ce"), col("cn")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+        .sortBy(_._1)
+    /** The per-subspace codebooks sorted by code id ([[centsByMFrom]]). */
+    @transient private[operators] lazy val centsByM
+        : Array[Array[(Long, Array[Double])]] = centsByMFrom(codebooks)
+    /** Per subspace, code id → its ascending-code rank: the index a
+      * stored code reads in the ADC tables. */
+    @transient private[operators] lazy val codeRank: Array[Map[Long, Int]] =
+      centsByM.map(_.iterator.map(_._1).zipWithIndex.toMap)
+  }
 
   /** The M·Kc codebook table collected into per-subspace
     * (code, centroid) arrays sorted by code id — the closure form both
@@ -767,22 +789,21 @@ object Pq {
     * the streaming ingest sink (Streams.annIngestSink) reuses it
     * verbatim per micro-batch. */
   private[graft] def encodeAgainst(index: IvfPqIndex, newVectors: DataFrame,
-                                   dim: Int, basis: DataFrame = null): DataFrame = {
+                                   dim: Int,
+                                   basis: Array[Array[Double]] = null): DataFrame = {
     // with a staged rotation the INPUT dim is the basis row width (the
     // original space the batch arrives in), while the codebooks encode
     // the rotated r — deriving d from the codebooks would reject every
     // valid batch
-    val ba = if (basis == null) null else basisArrOf(basis)
     val d =
-      if (ba != null) ba(0).length
+      if (basis != null) basis(0).length
       else if (dim > 0) dim
-      else index.codebooks.select(size(col("cs")).as("__w"))
-        .limit(1).collect().headOption match {
-        case Some(r) => r.getInt(0) * M
+      else index.centsByM.iterator.flatMap(_.iterator).nextOption() match {
+        case Some((_, cs)) => cs.length * M
         case None => throw new IllegalArgumentException(
           "cannot append to an index with empty codebooks")
       }
-    val encDim = if (ba == null) d else ba.length
+    val encDim = if (basis == null) d else basis.length
     require(encDim % M == 0,
       s"encoded dim $encDim must be divisible by M=$M")
     val subW = encDim / M
@@ -807,11 +828,11 @@ object Pq {
     // basis dots the build used (bounded r×d literals), so appended
     // codes are bit-identical to a rebuild's
     val encIn =
-      if (ba == null) unNew
+      if (basis == null) unNew
       else unNew.select(col("vec_id"),
-        array(ba.map(b => V.dot(col("u"), array(b.map(lit): _*))): _*).as("u"),
+        array(basis.map(b => V.dot(col("u"), array(b.map(lit): _*))): _*).as("u"),
         col("cell"))
-    val encoded = encodeCodes(encIn, centsByMFrom(index.codebooks), subW)
+    val encoded = encodeCodes(encIn, index.centsByM, subW)
     // metadata discipline: the batch must ride exactly the columns the
     // index's codes carry — a divergent-schema append would strip the
     // filter column from (or null it in) every later filtered scan
@@ -1063,105 +1084,73 @@ object Pq {
     * the corpus is touched only by the codes scan (compressed form)
     * and the candidate point-lookups — the build-once/query-many
     * contract. Same arithmetic and tie-breaks as [[knnIvfPqOn]], so a
-    * staged round-trip answers queries identically (spec-asserted). */
+    * staged round-trip answers queries identically (spec-asserted).
+    *
+    * Served shape — three Spark jobs against an opened index. The
+    * centroid and codebook tables are the index's artifacts, collected
+    * once per [[IvfPqIndex]] value ([[IvfPqIndex.centroidRows]],
+    * [[IvfPqIndex.centsByM]]), so a query runs exactly three collects:
+    *  1. the Q query rows ([[queryRowsOf]]);
+    *  2. the cell-pruned codes scan's per-partition Rerank-heaps, cut
+    *     on the driver to each query's top Rerank by (adist, vec_id) —
+    *     the `row_number() ≤ Rerank` cut in Spark's double order;
+    *  3. a point lookup of the ≤ Q·Rerank candidate float rows, whose
+    *     exact cosines rank by (cosine desc, vec_id) on the driver
+    *     ([[servedTopK]]).
+    * Everything held on the driver is O(Q·Rerank·d), the order of the
+    * Q·M·Kc ADC tables. The answer is a LOCAL DataFrame, computed by
+    * the time this returns, with the empty result's column names and
+    * types. A zero cosine denominator nulls or fails (DIVIDE_BY_ZERO)
+    * exactly as the column expression does under the session's ANSI
+    * setting. */
   def queryIvfPq(index: IvfPqIndex, vectors: DataFrame,
                  queryIds: Seq[Long], k: Int = K,
                  nprobe: Int = Similarity.IvfNProbe,
-                 basis: DataFrame = null): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    // query vectors + norms (Q point lookups on the corpus)
-    val vn = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val qRows = queryRowsOf(vn, queryIds)
-    if (qRows.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        lit(0).as("rank"), lit(0.0).as("cosine"))
-    // probes rank in ORIGINAL space; the ADC tables live in the
-    // index's code space (rotated when an OPQ basis is staged)
-    val (adcRows, subW) = adcQueryRows(qRows, basis)
-    val probesByQ = probesAgainst(index.centroids, qRows, nprobe)
-    val probedCells = probesByQ.values.flatten.toSet
-    val qIds = probesByQ.keys.toArray.sorted
-    val (dtByQ, codeRank) = adcTablesFor(index.codebooks, adcRows, subW)
-    // the ONE codes scan, cell-pruned, per-partition Rerank-heaps
-    val worstFirst: Ordering[(Long, Long, Double)] =
-      Ordering.by(t => (t._3, t._2))
-    // column-form cell filter BEFORE the typed scan: it pushes down to
-    // the staged codes parquet (cell-clustered files -> row-group
-    // min/max skipping), where a lambda filter would scan everything.
-    // The explicit projection drops any metadata columns riding the
-    // codes (buildIvfPq's metaCols) — the unfiltered scan never reads
-    // them, and the typed binding below is positional.
-    val pruned = index.codes
-      .filter(col("cell").isInCollection(probedCells.toSeq))
-      .select(col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Long, Array[Long])]
-      .mapPartitions { it =>
-        val heaps = scala.collection.mutable.Map
-          .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Long, Double)]]
-        it.foreach { case (vid, cell, cs) =>
-          var qi = 0
-          while (qi < qIds.length) {
-            val q = qIds(qi)
-            if (q != vid && probesByQ(q).contains(cell)) {
-              val dtm = dtByQ(q)
-              var acc = 0.0
-              var m = 0
-              while (m < M) { acc += dtm(m)(codeRank(m)(cs(m))); m += 1 }
-              val c = (q, vid, acc)
-              val h = heaps.getOrElseUpdate(q,
-                new scala.collection.mutable.PriorityQueue[(Long, Long, Double)]()(worstFirst))
-              if (h.size < Rerank) h.enqueue(c)
-              else if (worstFirst.compare(c, h.head) < 0) { h.dequeue(); h.enqueue(c) }
-            }
-            qi += 1
-          }
-        }
-        heaps.valuesIterator.flatMap(_.iterator)
-      }
-      .toDF("query_id", "vec_id", "adist")
-    val cw = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    val cand = broadcast(pruned.withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= Rerank)
-      .select(col("query_id"), col("vec_id")))
-    val qSide = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    cand.join(vn, "vec_id").join(qSide, "query_id")
-      .select(col("query_id"), col("vec_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"), col("cosine"))
+                 basis: Array[Array[Double]] = null): DataFrame = {
+    val vn = floatCorpus(vectors, None)
+    val empty = vectors.limit(0).select(
+      col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
+      lit(0).as("rank"), lit(0.0).as("cosine"))
+    val (qRows, _) = queryRowsOf(vn, queryIds, labeled = false)
+    if (qRows.isEmpty) return empty
+    servedTopK(vn, qRows,
+      topKScan(index, qRows, Map.empty, nprobe, basis, None).collect(),
+      k, empty.schema)
   }
+
+  /** The float corpus as the rerank reads it: (vec_id, e, [label,] nrm)
+    * — `filterCol` renamed to `label` when given. */
+  private def floatCorpus(vectors: DataFrame, filterCol: Option[String]): DataFrame =
+    vectors
+      .select(Seq(col("vec_id"), V.toDouble(col("embedding")).as("e")) ++
+        filterCol.map(c => col(c).as("label")): _*)
+      .withColumn("nrm", V.l2Norm(col("e")))
 
   /** Driver-side query rows off the float corpus: (vec_id, e, nrm)
     * for `queryIds` — Q point lookups, the bounded structure every
-    * staged query path ships in its scan closure. */
-  private[operators] def queryRowsOf(vn: DataFrame, queryIds: Seq[Long])
-      : Array[(Long, Array[Double], Double)] =
-    vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id"), col("e"), col("nrm")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+    * staged query path ships in its scan closure. `labeled` reads each
+    * query's label (as long — the oracle's `lab` CTE on the query
+    * side) in the same job. */
+  private[operators] def queryRowsOf(vn: DataFrame, queryIds: Seq[Long],
+                                     labeled: Boolean)
+      : (Array[(Long, Array[Double], Double)], Map[Long, Long]) = {
+    val rows = vn.filter(col("vec_id").isInCollection(queryIds))
+      .select(Seq(col("vec_id"), col("e"), col("nrm")) ++
+        (if (labeled) Seq(col("label").cast("long")) else Nil): _*)
+      .collect()
+    (rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))),
+      if (labeled) rows.map(r => (r.getLong(0), r.getLong(3))).toMap
+      else Map.empty)
+  }
 
-  /** Per-query probed cells off the C-row staged centroid table —
+  /** Per-query probed cells off the index's collected centroid table —
     * driver-side, the same (cdist desc, cell asc) convention as
-    * [[Similarity.probeFrame]]; shared by [[queryIvfPq]] and
-    * [[queryIvfPqFiltered]] (r16-advice class: one definition, not
-    * copies, because the staged paths are spec-equated to the
-    * one-shot keys). */
-  private[operators] def probesAgainst(centroids: DataFrame,
+    * [[Similarity.probeFrame]]; shared by every staged query form
+    * (r16-advice class: one definition, not copies, because the staged
+    * paths are spec-equated to the one-shot keys). */
+  private[operators] def probesAgainst(cents: Array[(Long, Array[Double], Double)],
                             qRows: Array[(Long, Array[Double], Double)],
-                            nprobe: Int): Map[Long, Set[Long]] = {
-    val cents = centroids
-      .select(col("cell").cast("long"), col("ce"), col("cn")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-      .sortBy(_._1)
+                            nprobe: Int): Map[Long, Set[Long]] =
     qRows.map { case (q, qe, qnrm) =>
       val ranked = cents.map { case (cell, ce, cn) =>
         var dot = 0.0; var j = 0
@@ -1170,31 +1159,19 @@ object Pq {
       }.sortBy { case (cell, cd) => (-cd, cell) }
       q -> ranked.take(nprobe).map(_._1).toSet
     }.toMap
-  }
 
   /** Per-query ADC distance tables (unit-normalized query subvectors
-    * against each codebook entry, the d2At arithmetic) plus the
-    * ascending-code rank maps — bounded: M·Kc codebook rows,
-    * Q·M·Kc table doubles. */
-  private[operators] def adcTablesFor(codebooks: DataFrame,
+    * against each codebook entry, the d2At arithmetic), indexed
+    * [m][code rank] — bounded: Q·M·Kc doubles. */
+  private[operators] def adcTablesFor(centsByM: Array[Array[(Long, Array[Double])]],
                            qRows: Array[(Long, Array[Double], Double)],
-                           subW: Int)
-      : (Map[Long, Array[Array[Double]]], Array[Map[Long, Int]]) = {
-    val rows = codebooks.collect().map(r =>
-      (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    val centsByM: Array[Array[(Long, Array[Double])]] =
-      Array.tabulate(M)(m =>
-        rows.filter(_._1 == m).sortBy(_._2).map(t => (t._2, t._3)))
-    val codeRank: Array[Map[Long, Int]] =
-      Array.tabulate(M)(m => centsByM(m).iterator.map(_._1).zipWithIndex.toMap)
-    val dtByQ: Map[Long, Array[Array[Double]]] = qRows.map { case (q, qe, qnrm) =>
+                           subW: Int): Map[Long, Array[Array[Double]]] =
+    qRows.map { case (q, qe, qnrm) =>
       val u = qe.map(_ / qnrm)
       q -> Array.tabulate(M) { m =>
         centsByM(m).map { case (_, cs) => Pq.d2At(u, m * subW, subW, cs) }
       }
     }.toMap
-    (dtByQ, codeRank)
-  }
 
   /** The staged rotation artifact ([[Opq]]'s `basis` frame: pos,
     * b: d doubles per ROTATED position, perm already applied)
@@ -1233,86 +1210,77 @@ object Pq {
 
   /** The per-tier ADC query derivation, rotation-aware: with no
     * `basis` the query subvectors are the original-space qRows (dim
-    * must divide M); with a staged rotation the qRows rotate
-    * driver-side ([[rotateRow]]) and the subspace width comes from
-    * the BASIS row count (the rotated dim r), never the query dim —
-    * the codebooks live in rotated space. qnrm of a rotated row is
-    * 1.0: the rotation already consumed the normalization, and
-    * x/1.0 == x in IEEE so [[adcTablesFor]]'s divide is a no-op. */
+    * must divide M); with a staged rotation (the collected r×d basis,
+    * [[Opq.IvfOpqIndex.basisArr]]) the qRows rotate driver-side
+    * ([[rotateRow]]) and the subspace width comes from the BASIS row
+    * count (the rotated dim r), never the query dim — the codebooks
+    * live in rotated space. qnrm of a rotated row is 1.0: the rotation
+    * already consumed the normalization, and x/1.0 == x in IEEE so
+    * [[adcTablesFor]]'s divide is a no-op. */
   private def adcQueryRows(qRows: Array[(Long, Array[Double], Double)],
-                           basis: DataFrame)
+                           basis: Array[Array[Double]])
       : (Array[(Long, Array[Double], Double)], Int) =
     if (basis == null) {
       val dim = qRows(0)._2.length
       require(dim % M == 0, s"embedding dim $dim must be divisible by M=$M")
       (qRows, dim / M)
     } else {
-      val ba = basisArrOf(basis)
-      require(ba.length % M == 0,
-        s"rotated dim ${ba.length} must be divisible by M=$M")
-      (qRows.map { case (q, qe, qnrm) => (q, rotateRow(qe, qnrm, ba), 1.0) },
-        ba.length / M)
+      require(basis.length % M == 0,
+        s"rotated dim ${basis.length} must be divisible by M=$M")
+      (qRows.map { case (q, qe, qnrm) => (q, rotateRow(qe, qnrm, basis), 1.0) },
+        basis.length / M)
     }
 
-  /** FILTERED top-k served off the STAGED compressed index (r16
-    * verdict item 1): [[queryIvfPq]]'s probe + ADC scan with the
-    * metadata predicate evaluated INSIDE the code scan — the filter
-    * column rides the code postings ([[buildIvfPq]]'s `metaCols`), so
-    * a filtered query touches the float corpus only for the Q query
-    * rows and the Rerank·Q candidate sliver, never per candidate. At
-    * 100 TB this is the whole point: the float postings are exactly
-    * what a filtered query cannot afford to scan, and a post-hoc
-    * filter on an unfiltered top-k under-fills k (the knn_filtered
-    * correctness trap).
-    *
-    * Probe width defaults to [[Similarity.FilteredNProbe]] — the
-    * selective filter must reach deeper into the global ranking to
-    * fill k same-label slots, and the widened probe still scans fewer
-    * post-filter codes than the unfiltered default width scans
-    * overall. The kernel compares the filter column AS LONG (integral
-    * metadata; a string-labeled deployment dictionary-encodes first).
-    * Output: (query_id, neighbor_id, label, rank, cosine) — exact
-    * cosines, the ADC order only shapes the candidate cut. */
-  def queryIvfPqFiltered(index: IvfPqIndex, vectors: DataFrame,
-                         queryIds: Seq[Long], k: Int = K,
-                         nprobe: Int = Similarity.FilteredNProbe,
-                         filterCol: String = "label",
-                         basis: DataFrame = null): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    require(index.codes.columns.contains(filterCol),
-      s"index codes carry no '$filterCol' column — " +
-        s"build the index with metaCols = Seq(\"$filterCol\")")
-    val vnl = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"),
-        col(filterCol).as("label"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val vn = vnl.select(col("vec_id"), col("e"), col("nrm"))
-    val qRows = queryRowsOf(vn, queryIds)
-    if (qRows.isEmpty)
-      return vectors.limit(0).select(
-        col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
-        col(filterCol).as("label"), lit(0).as("rank"), lit(0.0).as("cosine"))
+  /** What every staged query form ships in its codes-scan closure:
+    * per-query probed cells (ranked in ORIGINAL space) and ADC tables
+    * (in the index's code space — rotated when an OPQ basis is given),
+    * both derived from the index's collected artifacts. */
+  private final case class Probed(qIds: Array[Long],
+                                  probesByQ: Map[Long, Set[Long]],
+                                  probedCells: Set[Long],
+                                  dtByQ: Map[Long, Array[Array[Double]]])
+
+  private def probed(index: IvfPqIndex, qRows: Array[(Long, Array[Double], Double)],
+                     nprobe: Int, basis: Array[Array[Double]]): Probed = {
     val (adcRows, subW) = adcQueryRows(qRows, basis)
-    // query labels: Q point lookups on the corpus projection — the
-    // oracle's `lab` CTE joined onto the query side
-    val qLab: Map[Long, Long] = vnl
-      .filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id"), col("label").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val probesByQ = probesAgainst(index.centroids, qRows, nprobe)
-    val probedCells = probesByQ.values.flatten.toSet
-    val qIds = probesByQ.keys.toArray.sorted
-    val (dtByQ, codeRank) = adcTablesFor(index.codebooks, adcRows, subW)
+    val probesByQ = probesAgainst(index.centroidRows, qRows, nprobe)
+    Probed(probesByQ.keys.toArray.sorted, probesByQ,
+      probesByQ.values.flatten.toSet, adcTablesFor(index.centsByM, adcRows, subW))
+  }
+
+  /** The codes of the probed cells as (vec_id, cell, codes, label) —
+    * the column-form cell filter sits BEFORE the typed scan so it
+    * pushes down to the staged codes parquet as a partition filter
+    * (whole cell=<id> directories skipped), where a lambda filter would
+    * scan everything. The explicit projection drops metadata columns
+    * the form does not read; the unfiltered forms carry a constant
+    * label, since the typed binding is positional. */
+  private def probedCodes(index: IvfPqIndex, cells: Set[Long],
+                          filterCol: Option[String]): DataFrame =
+    index.codes
+      .filter(col("cell").isInCollection(cells.toSeq))
+      .select(col("vec_id"), col("cell"), col("codes"),
+        filterCol.fold(lit(0L))(c => col(c).cast("long")))
+
+  /** The ONE codes scan of the top-k forms: cell-pruned, one bounded
+    * Rerank-heap per query per partition (lossless: the global
+    * top-Rerank by (adist, vec_id) is a subset of the union of the
+    * per-partition top-Reranks). With `filterCol` a candidate must
+    * carry its query's label (`qLab`) — one long compare before any
+    * ADC sum. Rows: (query_id, vec_id, adist). */
+  private def topKScan(index: IvfPqIndex, qRows: Array[(Long, Array[Double], Double)],
+                       qLab: Map[Long, Long], nprobe: Int,
+                       basis: Array[Array[Double]],
+                       filterCol: Option[String]): Dataset[(Long, Long, Double)] = {
+    val spark = index.codes.sparkSession
+    import spark.implicits._
+    val p = probed(index, qRows, nprobe, basis)
+    val (qIds, probesByQ, dtByQ) = (p.qIds, p.probesByQ, p.dtByQ)
+    val codeRank = index.codeRank
+    val filtered = filterCol.isDefined
     val worstFirst: Ordering[(Long, Long, Double)] =
       Ordering.by(t => (t._3, t._2))
-    // the one codes scan: cell filter pushed to the partition dirs,
-    // label comparison per candidate INSIDE the kernel — a rejected
-    // candidate costs one long compare, no ADC sum
-    val pruned = index.codes
-      .filter(col("cell").isInCollection(probedCells.toSeq))
-      .select(col("vec_id"), col("cell"), col("codes"),
-        col(filterCol).cast("long"))
+    probedCodes(index, p.probedCells, filterCol)
       .as[(Long, Long, Array[Long], Long)]
       .mapPartitions { it =>
         val heaps = scala.collection.mutable.Map
@@ -1321,7 +1289,8 @@ object Pq {
           var qi = 0
           while (qi < qIds.length) {
             val q = qIds(qi)
-            if (q != vid && qLab(q) == lab && probesByQ(q).contains(cell)) {
+            if (q != vid && (!filtered || qLab(q) == lab) &&
+                probesByQ(q).contains(cell)) {
               val dtm = dtByQ(q)
               var acc = 0.0
               var m = 0
@@ -1337,26 +1306,149 @@ object Pq {
         }
         heaps.valuesIterator.flatMap(_.iterator)
       }
-      .toDF("query_id", "vec_id", "adist")
-    val cw = Window.partitionBy(col("query_id")).orderBy(col("adist"), col("vec_id"))
-    val cand = broadcast(pruned.withColumn("crk", row_number().over(cw))
-      .filter(col("crk") <= Rerank)
-      .select(col("query_id"), col("vec_id")))
-    val qSide = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    // exact rerank over the Rerank·Q sliver; the output label joins
-    // from the corpus projection so its TYPE is the source column's
-    cand.join(vnl, "vec_id").join(qSide, "query_id")
-      .select(col("query_id"), col("vec_id"), col("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("label"), col("rank"), col("cosine"))
   }
+
+  /** The candidate-scan frame a top-k query collects — the codes scan
+    * whose plan carries the static cell partition filter. Exposed for
+    * plan assertions only. */
+  private[graft] def topKCandidateScan(index: IvfPqIndex, vectors: DataFrame,
+                                       queryIds: Seq[Long],
+                                       filterCol: Option[String] = None,
+                                       basis: Array[Array[Double]] = null): DataFrame = {
+    val (qRows, qLab) = queryRowsOf(floatCorpus(vectors, filterCol), queryIds,
+      labeled = filterCol.isDefined)
+    val nprobe = if (filterCol.isDefined) Similarity.FilteredNProbe else Similarity.IvfNProbe
+    topKScan(index, qRows, qLab, nprobe, basis, filterCol)
+      .toDF("query_id", "vec_id", "adist")
+  }
+
+  /** Spark SQL's order on (adist, vec_id): doubles compare as SQL does
+    * (NaN largest, -0.0 == 0.0), ties break on the id. */
+  private val byAdist: Ordering[(Long, Long, Double)] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(a._3, b._3)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
+
+  /** Spark SQL's order on (cosine DESC, vec_id): a NULL cosine sorts
+    * last under `desc`, NaN first. */
+  private val byCosineDesc: Ordering[(Long, Any, java.lang.Double)] = (a, b) => {
+    val c = (a._3, b._3) match {
+      case (null, null) => 0
+      case (null, _) => 1
+      case (_, null) => -1
+      case (x, y) => SQLOrderingUtil.compareDoubles(y, x)
+    }
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+  }
+
+  /** The exact rerank cosine of one (candidate, query) pair: the
+    * column form's `V.cosineWithNorms(V.dot(e, qe), nrm, qnrm)` built
+    * from the same catalyst expressions — the `vec_dot` kernel, then
+    * `dot / (nrm · qnrm)` — and evaluated on the driver, so a NULL
+    * input or a zero denominator yields NULL, or DIVIDE_BY_ZERO under
+    * ANSI, exactly as in a plan. */
+  private def rerankCosine(e: ArrayData, nrm: java.lang.Double, qe: ArrayData,
+                           qnrm: Double, ctx: NumericEvalContext): java.lang.Double = {
+    val dot = if (e == null) null else java.lang.Double.valueOf(VecDot.dot(e, qe))
+    Divide(Literal.create(dot, DoubleType),
+      Multiply(Literal.create(nrm, DoubleType), Literal(qnrm), ctx), ctx)
+      .eval().asInstanceOf[java.lang.Double]
+  }
+
+  /** The collected top-k tail of [[queryIvfPq]] and
+    * [[queryIvfPqFiltered]]: cut the codes scan's heap survivors to
+    * each query's top Rerank by (adist, vec_id), point-look-up the
+    * candidates' float rows in ONE collect, and rank their exact
+    * cosines by (cosine desc, vec_id) to the top k — the driver twin
+    * of a broadcast-join + two-window tail. Inner-join multiplicities
+    * hold: a candidate absent from `vn` drops, and a vec_id present
+    * twice (in `vn` or among the query rows) pairs twice. `schema`
+    * (the empty result's, with a nullable cosine — the divide can
+    * NULL) fixes the local result's columns; with a `label` column the
+    * candidate's label rides in its source type. */
+  private def servedTopK(vn: DataFrame, qRows: Array[(Long, Array[Double], Double)],
+                         survivors: Array[(Long, Long, Double)], k: Int,
+                         emptySchema: StructType): DataFrame = {
+    val spark = vn.sparkSession
+    val labeled = emptySchema.fieldNames.contains("label")
+    val cand: Seq[(Long, Array[Long])] = survivors.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (q, rs) => q -> rs.sorted(byAdist).take(Rerank).map(_._2) }
+    val ids = cand.flatMap(_._2).distinct
+    val lookup: Map[Long, Array[(ArrayData, java.lang.Double, Any)]] =
+      if (ids.isEmpty) Map.empty
+      else vn.filter(col("vec_id").isInCollection(ids))
+        .select(Seq(col("vec_id"), col("e"), col("nrm")) ++
+          (if (labeled) Seq(col("label")) else Nil): _*)
+        .collect()
+        .map(r => (r.getLong(0),
+          (if (r.isNullAt(1)) null else ArrayData.toArrayData(r.getSeq[Double](1).toArray),
+            if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2)),
+            if (labeled) r.get(3) else null)))
+        .groupMap(_._1)(_._2)
+    val qSide: Map[Long, Array[(ArrayData, Double)]] = qRows
+      .groupMap(_._1) { case (_, qe, qnrm) => (ArrayData.toArrayData(qe), qnrm) }
+    val ctx = NumericEvalContext(EvalMode.fromBoolean(
+      spark.conf.get("spark.sql.ansi.enabled").toBoolean))
+    val rows = cand.flatMap { case (q, vids) =>
+      val scored = for {
+        vid <- vids.toSeq
+        (e, nrm, lab) <- lookup.getOrElse(vid, Array.empty[(ArrayData, java.lang.Double, Any)]).toSeq
+        (qe, qnrm) <- qSide(q).toSeq
+      } yield (vid, lab, rerankCosine(e, nrm, qe, qnrm, ctx))
+      scored.sorted(byCosineDesc).take(k).zipWithIndex.map { case ((vid, lab, cos), i) =>
+        if (labeled) Row(q, vid, lab, i + 1, cos) else Row(q, vid, i + 1, cos)
+      }
+    }
+    val schema = StructType(emptySchema.map(f =>
+      if (f.name == "cosine") f.copy(nullable = true) else f))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** FILTERED top-k served off the STAGED compressed index (r16
+    * verdict item 1): [[queryIvfPq]]'s probe + ADC scan with the
+    * metadata predicate evaluated INSIDE the code scan — the filter
+    * column rides the code postings ([[buildIvfPq]]'s `metaCols`), so
+    * a filtered query touches the float corpus only for the Q query
+    * rows and the Rerank·Q candidate sliver, never per candidate. At
+    * 100 TB this is the whole point: the float postings are exactly
+    * what a filtered query cannot afford to scan, and a post-hoc
+    * filter on an unfiltered top-k under-fills k (the knn_filtered
+    * correctness trap).
+    *
+    * Served shape: [[queryIvfPq]]'s — the index's collected artifacts
+    * plus three collects. The query rows' collect also reads each
+    * query's label, and the candidate lookup reads each candidate's
+    * label, so the output label keeps the source column's type.
+    *
+    * Probe width defaults to [[Similarity.FilteredNProbe]] — the
+    * selective filter must reach deeper into the global ranking to
+    * fill k same-label slots, and the widened probe still scans fewer
+    * post-filter codes than the unfiltered default width scans
+    * overall. The kernel compares the filter column AS LONG (integral
+    * metadata; a string-labeled deployment dictionary-encodes first).
+    * Output: (query_id, neighbor_id, label, rank, cosine) — exact
+    * cosines, the ADC order only shapes the candidate cut. */
+  def queryIvfPqFiltered(index: IvfPqIndex, vectors: DataFrame,
+                         queryIds: Seq[Long], k: Int = K,
+                         nprobe: Int = Similarity.FilteredNProbe,
+                         filterCol: String = "label",
+                         basis: Array[Array[Double]] = null): DataFrame = {
+    requireFilterCol(index, filterCol)
+    val vnl = floatCorpus(vectors, Some(filterCol))
+    val empty = vectors.limit(0).select(
+      col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
+      col(filterCol).as("label"), lit(0).as("rank"), lit(0.0).as("cosine"))
+    val (qRows, qLab) = queryRowsOf(vnl, queryIds, labeled = true)
+    if (qRows.isEmpty) return empty
+    servedTopK(vnl, qRows,
+      topKScan(index, qRows, qLab, nprobe, basis, Some(filterCol)).collect(),
+      k, empty.schema)
+  }
+
+  private def requireFilterCol(index: IvfPqIndex, filterCol: String): Unit =
+    require(index.codes.columns.contains(filterCol),
+      s"index codes carry no '$filterCol' column — " +
+        s"build the index with metaCols = Seq(\"$filterCol\")")
 
   /** Driver query (key `knn_ivf_pq_filtered`): the filtered serving
     * path run END TO END through the cross-engine gate — build with
@@ -1371,6 +1463,63 @@ object Pq {
     writeIvfPqIndex(buildIvfPq(vectors, metaCols = Seq("label")), path)
     queryIvfPqFiltered(readIvfPqIndex(spark, path), vectors,
       0L until NQueries.toLong)
+  }
+
+  /** The radius forms' stateless admission scan: cell-pruned, each
+    * probed candidate's ADC sum against the cut adist ≤ 2(1−τ) (with
+    * `filterCol`, same-label candidates only). No heap, no window —
+    * the admitted set is data-dependent, so it stays distributed.
+    * Rows: (query_id, vec_id). */
+  private def radiusScan(index: IvfPqIndex, qRows: Array[(Long, Array[Double], Double)],
+                         qLab: Map[Long, Long], tau: Double, nprobe: Int,
+                         basis: Array[Array[Double]],
+                         filterCol: Option[String]): DataFrame = {
+    val spark = index.codes.sparkSession
+    import spark.implicits._
+    val p = probed(index, qRows, nprobe, basis)
+    val (qIds, probesByQ, dtByQ) = (p.qIds, p.probesByQ, p.dtByQ)
+    val codeRank = index.codeRank
+    val filtered = filterCol.isDefined
+    // 2(1−τ) in IEEE — exactly representable for the driver's τ=0.25;
+    // the oracle embeds the same computed double via strtod
+    val admitD2 = 2.0 * (1.0 - tau)
+    probedCodes(index, p.probedCells, filterCol)
+      .as[(Long, Long, Array[Long], Long)]
+      .mapPartitions { it =>
+        it.flatMap { case (vid, cell, cs, lab) =>
+          qIds.iterator
+            .filter(q => q != vid && (!filtered || qLab(q) == lab) &&
+              probesByQ(q).contains(cell))
+            .map { q =>
+              val dtm = dtByQ(q)
+              var acc = 0.0
+              var m = 0
+              while (m < M) { acc += dtm(m)(codeRank(m)(cs(m))); m += 1 }
+              (q, vid, acc)
+            }
+            .filter(_._3 <= admitD2)
+        }
+      }
+      .toDF("query_id", "vec_id", "adist")
+      .select(col("query_id"), col("vec_id"))
+  }
+
+  /** The radius forms' exact verify: the admitted pairs join the float
+    * corpus on vec_id (a shuffle join — the admitted set is
+    * data-dependent) and the query side, a local relation built from
+    * the already-collected query rows, then keep cosine ≥ τ. */
+  private def radiusVerify(cand: DataFrame, vn: DataFrame,
+                           qRows: Array[(Long, Array[Double], Double)],
+                           tau: Double, labeled: Boolean): DataFrame = {
+    val spark = vn.sparkSession
+    import spark.implicits._
+    val qSide = broadcast(qRows.toSeq.toDF("query_id", "qe", "qnrm"))
+    cand.join(vn, "vec_id").join(qSide, "query_id")
+      .select(Seq(col("query_id"), col("vec_id").as("neighbor_id")) ++
+        (if (labeled) Seq(col("label")) else Nil) ++
+        Seq(V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
+          .as("cosine")): _*)
+      .filter(col("cosine") >= tau)
   }
 
   /** RADIUS query off the STAGED compressed index (key
@@ -1390,60 +1539,24 @@ object Pq {
     *
     * 100 TB: probes bound the scan to ~nprobe/C of the codes, the
     * τ-filter collapses the candidate stream before any shuffle, and
-    * the float corpus is touched only for the Q query rows and the
+    * the float corpus is touched only for the Q query rows (collected
+    * once; the verify's query side is built from them) and the
     * |admitted|-sized verify sliver. The admitted set is
     * data-dependent, so unlike top-k's Rerank·Q sliver it is NOT
-    * broadcast — the verify join shuffles on vec_id. */
+    * collected — the verify join shuffles on vec_id. */
   def queryIvfPqRadius(index: IvfPqIndex, vectors: DataFrame,
                        queryIds: Seq[Long],
                        tau: Double = Similarity.RadiusTau,
                        nprobe: Int = Similarity.IvfNProbe,
-                       basis: DataFrame = null): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val vn = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val qRows = queryRowsOf(vn, queryIds)
+                       basis: Array[Array[Double]] = null): DataFrame = {
+    val vn = floatCorpus(vectors, None)
+    val (qRows, _) = queryRowsOf(vn, queryIds, labeled = false)
     if (qRows.isEmpty)
       return vectors.limit(0).select(
         col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
         lit(0.0).as("cosine"))
-    val (adcRows, subW) = adcQueryRows(qRows, basis)
-    val probesByQ = probesAgainst(index.centroids, qRows, nprobe)
-    val probedCells = probesByQ.values.flatten.toSet
-    val qIds = probesByQ.keys.toArray.sorted
-    val (dtByQ, codeRank) = adcTablesFor(index.codebooks, adcRows, subW)
-    // 2(1−τ) in IEEE — exactly representable for the driver's τ=0.25;
-    // the oracle embeds the same computed double via strtod
-    val admitD2 = 2.0 * (1.0 - tau)
-    val cand = index.codes
-      .filter(col("cell").isInCollection(probedCells.toSeq))
-      .select(col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Long, Array[Long])]
-      .mapPartitions { it =>
-        it.flatMap { case (vid, cell, cs) =>
-          qIds.iterator
-            .filter(q => q != vid && probesByQ(q).contains(cell))
-            .map { q =>
-              val dtm = dtByQ(q)
-              var acc = 0.0
-              var m = 0
-              while (m < M) { acc += dtm(m)(codeRank(m)(cs(m))); m += 1 }
-              (q, vid, acc)
-            }
-            .filter(_._3 <= admitD2)
-        }
-      }
-      .toDF("query_id", "vec_id", "adist")
-      .select(col("query_id"), col("vec_id"))
-    val qSide = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    cand.join(vn, "vec_id").join(qSide, "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
+    radiusVerify(radiusScan(index, qRows, Map.empty, tau, nprobe, basis, None),
+      vn, qRows, tau, labeled = false)
   }
 
   /** FILTERED RADIUS off the staged compressed index (key
@@ -1463,60 +1576,17 @@ object Pq {
                                tau: Double = Similarity.RadiusTau,
                                nprobe: Int = Similarity.FilteredNProbe,
                                filterCol: String = "label",
-                               basis: DataFrame = null): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    require(index.codes.columns.contains(filterCol),
-      s"index codes carry no '$filterCol' column — " +
-        s"build the index with metaCols = Seq(\"$filterCol\")")
-    val vnl = vectors
-      .select(col("vec_id"), V.toDouble(col("embedding")).as("e"),
-        col(filterCol).as("label"))
-      .withColumn("nrm", V.l2Norm(col("e")))
-    val vn = vnl.select(col("vec_id"), col("e"), col("nrm"))
-    val qRows = queryRowsOf(vn, queryIds)
+                               basis: Array[Array[Double]] = null): DataFrame = {
+    requireFilterCol(index, filterCol)
+    val vnl = floatCorpus(vectors, Some(filterCol))
+    val (qRows, qLab) = queryRowsOf(vnl, queryIds, labeled = true)
     if (qRows.isEmpty)
       return vectors.limit(0).select(
         col("vec_id").as("query_id"), col("vec_id").as("neighbor_id"),
         col(filterCol).as("label"), lit(0.0).as("cosine"))
-    val (adcRows, subW) = adcQueryRows(qRows, basis)
-    val qLab: Map[Long, Long] = vnl
-      .filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id"), col("label").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val probesByQ = probesAgainst(index.centroids, qRows, nprobe)
-    val probedCells = probesByQ.values.flatten.toSet
-    val qIds = probesByQ.keys.toArray.sorted
-    val (dtByQ, codeRank) = adcTablesFor(index.codebooks, adcRows, subW)
-    val admitD2 = 2.0 * (1.0 - tau)
-    val cand = index.codes
-      .filter(col("cell").isInCollection(probedCells.toSeq))
-      .select(col("vec_id"), col("cell"), col("codes"),
-        col(filterCol).cast("long"))
-      .as[(Long, Long, Array[Long], Long)]
-      .mapPartitions { it =>
-        it.flatMap { case (vid, cell, cs, lab) =>
-          qIds.iterator
-            .filter(q => q != vid && qLab(q) == lab && probesByQ(q).contains(cell))
-            .map { q =>
-              val dtm = dtByQ(q)
-              var acc = 0.0
-              var m = 0
-              while (m < M) { acc += dtm(m)(codeRank(m)(cs(m))); m += 1 }
-              (q, vid, acc)
-            }
-            .filter(_._3 <= admitD2)
-        }
-      }
-      .toDF("query_id", "vec_id", "adist")
-      .select(col("query_id"), col("vec_id"))
-    val qSide = broadcast(vn.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qnrm")))
-    cand.join(vnl, "vec_id").join(qSide, "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("label"),
-        V.cosineWithNorms(V.dot(col("e"), col("qe")), col("nrm"), col("qnrm"))
-          .as("cosine"))
-      .filter(col("cosine") >= tau)
+    radiusVerify(
+      radiusScan(index, qRows, qLab, tau, nprobe, basis, Some(filterCol)),
+      vnl, qRows, tau, labeled = true)
   }
 
   /** Driver query (key `knn_ivf_pq_radius_filtered`): build with the

@@ -698,12 +698,10 @@ object Streams {
     // schema-inference attempt + AnalysisException per micro-batch
     // (readLakeOpt's probe), ~100 ms of listing RPCs on an object
     // store for a tree that almost never exists on this path.
-    if (publishEveryRows <= 0L) {
-      val pendingP = new org.apache.hadoop.fs.Path(annPendingPath(root))
-      if (pendingP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(pendingP))
-        annIngestFlushPending(spark, root, keep)
-    }
+    val pendingP = new org.apache.hadoop.fs.Path(annPendingPath(root))
+    val pendingFs = pendingP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (publishEveryRows <= 0L && pendingFs.exists(pendingP))
+      annIngestFlushPending(spark, root, keep)
     val live =
       try IndexManifest.currentOrFail(spark, root)
       catch {
@@ -740,8 +738,13 @@ object Streams {
     // rows already wait in pending must not re-append them. Pending
     // rows are BY CONSTRUCTION encoded under the live epoch (the
     // stamp check here + the publishRetrain fence), so their claim
-    // stays cell-pruned even when the live epoch moved.
-    val pendingDf = readLakeOpt(spark, annPendingPath(root))
+    // stays cell-pruned even when the live epoch moved. One existence
+    // probe, taken after the drain above, guards the read: a missing
+    // tree (every batch on the per-batch path) must not pay a failed
+    // parquet resolve.
+    val pendingDf =
+      if (pendingFs.exists(pendingP)) readLakeOpt(spark, annPendingPath(root))
+      else None
     pendingDf.foreach { _ =>
       val pendingEpoch = IndexManifest.epochOf(spark, annPendingPath(root))
       require(pendingEpoch == liveEpoch,

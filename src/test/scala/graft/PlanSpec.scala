@@ -825,8 +825,10 @@ class PlanSpec extends SparkSpecBase {
       }
       assert(!p.contains("CartesianProduct"), s"$what: cartesian in:\n$p")
     }
-    assertPruned(Pq.queryIvfPq(staged, vectors, qids), "queryIvfPq")
-    assertPruned(Pq.queryIvfPqFiltered(staged, vectors, qids),
+    // the top-k forms collect their candidate scan and return a local
+    // frame, so the cut is asserted on the scan frame they collect
+    assertPruned(Pq.topKCandidateScan(staged, vectors, qids), "queryIvfPq")
+    assertPruned(Pq.topKCandidateScan(staged, vectors, qids, Some("label")),
       "queryIvfPqFiltered")
     // the radius tier prunes the same way and never ranks: admission
     // is a stateless threshold filter, not a window
@@ -883,9 +885,11 @@ class PlanSpec extends SparkSpecBase {
         s"$what: the basis artifact leaked into the serving plan:\n$p")
       assert(!p.contains("CartesianProduct"), s"$what: cartesian in:\n$p")
     }
-    assertPruned(Opq.queryIvfOpq(staged, vectors, qids), "queryIvfOpq")
-    assertPruned(Opq.queryIvfOpqFiltered(staged, vectors, qids),
-      "queryIvfOpqFiltered")
+    // top-k: the candidate scan the served path collects
+    assertPruned(graft.operators.Pq.topKCandidateScan(staged.pq, vectors, qids,
+      basis = staged.basisArr), "queryIvfOpq")
+    assertPruned(graft.operators.Pq.topKCandidateScan(staged.pq, vectors, qids,
+      Some("label"), staged.basisArr), "queryIvfOpqFiltered")
     val radius = Opq.queryIvfOpqRadius(staged, vectors, qids)
     assertPruned(radius, "queryIvfOpqRadius")
     assert("Window \\[".r.findAllIn(plan(radius)).isEmpty,
