@@ -1012,13 +1012,17 @@ object ScaleCheck {
             .select((col("id") + pParts * 50 + tag * 1000).as("vec_id"),
               pmod(col("id"), lit(4L)).as("cell"),
               md5(col("id").cast("string")).as("payload"))
+          def append(b: org.apache.spark.sql.DataFrame): Long = {
+            val live = operators.IndexManifest.currentOrFail(spark, root)
+            operators.IndexManifest.appendRowsAtomic(spark, root, live,
+              operators.IndexManifest.readFrame(spark, live, "codes"),
+              "codes", "cell", b, keep = 2)
+          }
           // warm delta (untimed): first refs delta pays the one-time
           // full-publish tree walk; link pays JIT
-          operators.IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-            batch(0), keep = 2)
+          append(batch(0))
           val t0 = System.nanoTime()
-          operators.IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-            batch(1), keep = 2)
+          append(batch(1))
           (System.nanoTime() - t0) / 1e9
         } finally spark.conf.unset("spark.graft.manifest.mode")
       }

@@ -423,9 +423,9 @@ object Opq {
                               newVectors: DataFrame, keep: Int = 2): Long = {
     val live = IndexManifest.currentOrFail(spark, root)
     val index = readIvfOpqIndex(spark, live)
-    IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-      Pq.encodeAgainst(index.pq, newVectors, 0, index.basisArr), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
+    IndexManifest.appendRowsAtomic(spark, root, live, index.pq.codes,
+      "codes", "cell",
+      Pq.encodeAgainst(index.pq, newVectors, 0, index.basisArr), keep)
   }
 
   /** ATOMIC rotated erasure — the codes tree is the PQ layout

@@ -592,9 +592,7 @@ object Pq {
     /** The C-row centroid table as (cell, ce, cn), sorted by cell. */
     @transient private[operators] lazy val centroidRows
         : Array[(Long, Array[Double], Double)] =
-      centroids.select(col("cell").cast("long"), col("ce"), col("cn")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-        .sortBy(_._1)
+      Similarity.collectCentroids(centroids, "cell", "ce", "cn")
     /** The per-subspace codebooks sorted by code id ([[centsByMFrom]]). */
     @transient private[operators] lazy val centsByM
         : Array[Array[(Long, Array[Double])]] = centsByMFrom(codebooks)
@@ -821,7 +819,7 @@ object Pq {
             .cast("array<double>"))
           .as("e"))
       .withColumn("nrm", V.l2Norm(col("e")))
-    val unNew = Similarity.assignNearest(vNew, index.centroids, "cell", "ce", "cn")
+    val unNew = Similarity.assignNearestTo(vNew, index.centroidRows, "cell")
       .select(col("vec_id"),
         transform(col("e"), x => x / col("nrm")).as("u"), col("cell"))
     // rotated tier: the batch rotates through the SAME column-form
@@ -877,12 +875,13 @@ object Pq {
                              newVectors: DataFrame, dim: Int = 0,
                              keep: Int = 2): Long = {
     val live = IndexManifest.currentOrFail(spark, root)
-    // epoch-pinned (r20): the encode below derives cells/codes from
-    // THIS version's centroids+codebooks — a retrain publishing
-    // mid-flight fails the append loudly instead of landing stale rows
-    IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-      encodeAgainst(readIvfPqIndex(spark, live), newVectors, dim), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
+    val index = readIvfPqIndex(spark, live)
+    // the publish is pinned to `live`'s retrain epoch (r20): the encode
+    // derives cells/codes from THIS version's centroids+codebooks — a
+    // retrain publishing mid-flight fails the append loudly instead of
+    // landing stale rows
+    IndexManifest.appendRowsAtomic(spark, root, live, index.codes, "codes",
+      "cell", encodeAgainst(index, newVectors, dim), keep)
   }
 
   /** ATOMIC right-to-erasure: [[deleteFromIvfPqIndex]]'s survivor

@@ -247,7 +247,8 @@ object Quantize {
                            newVectors: DataFrame, keep: Int = 2): Long = {
     val live = IndexManifest.currentOrFail(spark, root)
     val ranges = IndexManifest.readFrame(spark, live, "ranges")
-    val riding = IndexManifest.readFrame(spark, live, "codes").columns.toSeq
+    val liveCodes = IndexManifest.readFrame(spark, live, "codes")
+    val riding = liveCodes.columns.toSeq
       .filterNot(Set("vec_id", "codes", "grp"))
     riding.foreach(c => require(newVectors.columns.contains(c),
       s"appendSq8IndexAtomic: the staged codes ride metadata column '$c' " +
@@ -259,9 +260,8 @@ object Quantize {
         newVectors.select((Seq("vec_id") ++ riding).map(col): _*), "vec_id")
     // epoch-pinned like every tier append (r20): the grid the encode
     // used is this version's — a mid-flight retrain fails loudly
-    IndexManifest.appendRowsAtomic(spark, root, "codes", "grp",
-      withGrp(withMeta), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
+    IndexManifest.appendRowsAtomic(spark, root, live, liveCodes, "codes",
+      "grp", withGrp(withMeta), keep)
   }
 
   /** ATOMIC SQ8 erasure: [[deleteFromSq8Index]]'s survivor semantics
@@ -1035,7 +1035,9 @@ object Quantize {
   def appendIvfSq8Index(spark: SparkSession, path: String,
                         newVectors: DataFrame): Long = {
     val staged = Scratch.stageReuse(
-      ivfSq8AppendBatch(spark, path, newVectors), "ivf_sq8_append_codes")
+      ivfSq8AppendBatch(spark, path,
+        IndexManifest.readFrame(spark, path, "codes"), newVectors),
+      "ivf_sq8_append_codes")
     staged.repartition(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
     staged.count()
@@ -1044,12 +1046,14 @@ object Quantize {
   /** The composed append's arithmetic alone — assign (frozen
     * centroids) + quantize (frozen staged grid) with riding metadata,
     * as an unmaterialized code frame. Shared by the in-place fast
-    * path and the manifest-atomic form. */
+    * path and the manifest-atomic form; `codes` is the opened codes
+    * frame of the index at `path`. */
   private def ivfSq8AppendBatch(spark: SparkSession, path: String,
+                                codes: DataFrame,
                                 newVectors: DataFrame): DataFrame = {
     val centroids = IndexManifest.readFrame(spark, path, "centroids")
     val stagedRg = IndexManifest.readFrame(spark, path, "ranges")
-    val riding = IndexManifest.readFrame(spark, path, "codes").columns.toSeq
+    val riding = codes.columns.toSeq
       .filterNot(Set("vec_id", "codes", "cell"))
     riding.foreach(c => require(newVectors.columns.contains(c),
       s"appendIvfSq8Index: the staged codes ride metadata column '$c' " +
@@ -1090,9 +1094,9 @@ object Quantize {
   def appendIvfSq8IndexAtomic(spark: SparkSession, root: String,
                               newVectors: DataFrame, keep: Int = 2): Long = {
     val live = IndexManifest.currentOrFail(spark, root)
-    IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-      ivfSq8AppendBatch(spark, live, newVectors), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
+    val liveCodes = IndexManifest.readFrame(spark, live, "codes")
+    IndexManifest.appendRowsAtomic(spark, root, live, liveCodes, "codes",
+      "cell", ivfSq8AppendBatch(spark, live, liveCodes, newVectors), keep)
   }
 
   /** ATOMIC composed erasure — the codes tree is the PQ layout

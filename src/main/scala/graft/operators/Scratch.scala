@@ -91,6 +91,31 @@ private[graft] object Scratch {
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
+  /** A per-call staging with the shape its write observed: the scan
+    * over the staged rows, the [[dir]] to [[release]] once every scan
+    * of it has run, the row count, and the distinct values of one long
+    * key column. */
+  final case class Observed(scan: org.apache.spark.sql.DataFrame, path: String,
+                            rows: Long, keys: Set[Long])
+
+  /** Materialize `df` into a fresh [[dir]] and read its row count and
+    * its distinct `keyCol` values off a CollectMetrics observation on
+    * that one write (the `Graph.stagedCounted` pattern): neither costs
+    * a second job. Per-call, so concurrent callers never share a
+    * staging; the caller releases [[Observed.path]]. */
+  def stageObserved(df: org.apache.spark.sql.DataFrame, prefix: String,
+                    keyCol: String): Observed = {
+    import org.apache.spark.sql.functions.{col, collect_set, count, lit}
+    val obs = org.apache.spark.sql.Observation()
+    val path = dir(prefix)
+    df.observe(obs, count(lit(1)).as("n"),
+        collect_set(col(keyCol).cast("long")).as("keys"))
+      .write.mode("overwrite").parquet(path)
+    val m = obs.get
+    Observed(df.sparkSession.read.schema(df.schema).parquet(path), path,
+      m("n").asInstanceOf[Long], m("keys").asInstanceOf[Seq[Long]].toSet)
+  }
+
   /** Eagerly delete a scratch directory from [[dir]]/[[diskDir]] whose
     * consumer is DONE with it (all scans materialized) — long-lived
     * processes that stage per-call (the manifest delta publisher under

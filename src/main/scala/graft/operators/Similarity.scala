@@ -476,14 +476,26 @@ object Similarity {
     * collect is bounded: C rows (√(n/2) auto-sized — ~22k rows × d
     * doubles even at a 10^9-vector corpus). */
   private[operators] def assignNearest(v: DataFrame, centroids: DataFrame,
-                            cellCol: String, ceCol: String, cnCol: String): DataFrame = {
-    val spark = v.sparkSession
-    import spark.implicits._
-    val cents: Array[(Long, Array[Double], Double)] = centroids
+                            cellCol: String, ceCol: String, cnCol: String): DataFrame =
+    assignNearestTo(v, collectCentroids(centroids, cellCol, ceCol, cnCol), cellCol)
+
+  /** The C-row centroid table collected as (cell, ce, cn), sorted by
+    * cell — the closure [[assignNearestTo]] ships. */
+  private[operators] def collectCentroids(centroids: DataFrame, cellCol: String,
+      ceCol: String, cnCol: String): Array[(Long, Array[Double], Double)] =
+    centroids
       .select(col(cellCol).cast("long"), col(ceCol), col(cnCol))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
       .sortBy(_._1)
+
+  /** [[assignNearest]] over centroids already collected (sorted by
+    * cell, as [[collectCentroids]] and `Pq.IvfPqIndex.centroidRows`
+    * return them): an opened index assigns without a second collect. */
+  private[operators] def assignNearestTo(v: DataFrame,
+      cents: Array[(Long, Array[Double], Double)], cellCol: String): DataFrame = {
+    val spark = v.sparkSession
+    import spark.implicits._
     v.select(col("vec_id"), col("e"), col("nrm"))
       .as[(Long, Array[Double], Double)]
       .mapPartitions { it =>
@@ -1648,7 +1660,9 @@ object Similarity {
   def appendIvfIndex(spark: SparkSession, path: String,
                      newVectors: DataFrame): Long = {
     val staged = Scratch.stageReuse(
-      ivfAppendBatch(spark, path, newVectors), "ivf_float_append")
+      ivfAppendBatch(spark, path,
+        IndexManifest.readFrame(spark, path, "postings"), newVectors),
+      "ivf_float_append")
     staged.repartition(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/postings")
     staged.count()
@@ -1658,8 +1672,10 @@ object Similarity {
     * `path`'s frozen centroids with its metadata riding, as an
     * (unmaterialized) posting frame. Shared by the in-place fast path
     * ([[appendIvfIndex]]) and the manifest-atomic form
-    * ([[appendIvfIndexAtomic]]). */
+    * ([[appendIvfIndexAtomic]]); `postings` is the opened postings
+    * frame of the index at `path`. */
   private def ivfAppendBatch(spark: SparkSession, path: String,
+                             postings: DataFrame,
                              newVectors: DataFrame): DataFrame = {
     val centroids = IndexManifest.readFrame(spark, path, "centroids")
     // dimension discipline (the r15-advice class, float form): a
@@ -1690,7 +1706,7 @@ object Similarity {
     // differ from the staged postings' would write a divergent-schema
     // cell file (readers then see nulls or drop the filter column) —
     // fail loudly instead
-    val stagedMeta = IndexManifest.readFrame(spark, path, "postings").columns.toSet
+    val stagedMeta = postings.columns.toSet
       .diff(Set("vec_id", "e", "nrm", "cell"))
     val batchMeta = metaCols(newVectors).toSet
     require(batchMeta == stagedMeta,
@@ -1715,12 +1731,12 @@ object Similarity {
   def appendIvfIndexAtomic(spark: SparkSession, root: String,
                            newVectors: DataFrame, keep: Int = 2): Long = {
     val live = IndexManifest.currentOrFail(spark, root)
+    val postings = IndexManifest.readFrame(spark, live, "postings")
     // epoch-pinned (r20): cell assignment derives from this version's
     // centroids — a retrain publishing mid-flight fails loudly instead
     // of landing the batch at stale cells on the retrained tree
-    IndexManifest.appendRowsAtomic(spark, root, "postings", "cell",
-      ivfAppendBatch(spark, live, newVectors), keep,
-      requireEpoch = Some(IndexManifest.epochOf(spark, live)))
+    IndexManifest.appendRowsAtomic(spark, root, live, postings, "postings",
+      "cell", ivfAppendBatch(spark, live, postings, newVectors), keep)
   }
 
   /** ATOMIC float-tier erasure: [[deleteFromIvfIndex]]'s semantics

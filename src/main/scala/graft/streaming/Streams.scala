@@ -573,23 +573,28 @@ object Streams {
           s"annIngestSink needs a day-0 writeIvfPqIndex artifact at " +
             s"$indexPath — build once, then stream appends", e)
       }
-    // one encode pass, staged: the cells probe, the idempotence
-    // anti-join, the write, and the count all read the same parquet
-    val newCodes = graft.operators.Scratch.stageReuse(
-      graft.operators.Pq.encodeAgainst(index, batch, 0), "ann_ingest_codes")
-    val cells = newCodes.select("cell").distinct()
-    val existingIds = index.codes
-      .join(broadcast(cells), Seq("cell"), "left_semi")
-      .select("vec_id")
-    val fresh = graft.operators.Scratch.stageReuse(
-      newCodes.join(existingIds, Seq("vec_id"), "left_anti"),
-      "ann_ingest_fresh")
-    val n = fresh.count()
-    if (n > 0)
-      fresh.repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$indexPath/codes")
-    n
+    import graft.operators.Scratch
+    // one encode pass, staged per call (two sinks may run concurrently):
+    // its write observes the batch's cells, which prune the existing-id
+    // read statically; the anti-join is staged the same way, so its
+    // row count costs no job either
+    val newCodes = Scratch.stageObserved(
+      graft.operators.Pq.encodeAgainst(index, batch, 0), "ann_ingest_codes", "cell")
+    try {
+      val existingIds = index.codes
+        .filter(col("cell").isInCollection(newCodes.keys.toSeq))
+        .select("vec_id")
+      val fresh = Scratch.stageObserved(
+        newCodes.scan.join(existingIds, Seq("vec_id"), "left_anti"),
+        "ann_ingest_fresh", "cell")
+      try {
+        if (fresh.rows > 0)
+          fresh.scan.repartition(col("cell"))
+            .write.mode("append").partitionBy("cell")
+            .parquet(s"$indexPath/codes")
+        fresh.rows
+      } finally Scratch.release(fresh.path)
+    } finally Scratch.release(newCodes.path)
   }
 
   /** ATOMIC form of [[annIngestSink]] (r18 — the streaming twin of
@@ -606,8 +611,7 @@ object Streams {
     * version and the full replay re-lands the batch wholly. Superseded
     * versions retire behind `keep` (keep ≥ 2 keeps the immediately
     * superseded version alive past any in-flight reader — the
-    * retention rule). Per-batch bill: the in-place sink's encode +
-    * anti-join + touched-cell rewrite, plus the mirror's metadata ops. */
+    * retention rule). Per-batch bill: see [[annIngestMicroBatchAtomic]]. */
   def annIngestSinkAtomic(vectors: DataFrame, root: String, keep: Int = 2,
                           publishEveryRows: Long = 0L) =
     vectors.writeStream
@@ -653,6 +657,20 @@ object Streams {
   /** The atomic foreachBatch core (exposed for the replay spec).
     * Returns appended code rows (0 for a full replay — no version
     * published, nothing re-staged).
+    *
+    * Per-batch bill, each piece of work once: open the live version
+    * (its centroids and codebooks collected once, and the encode
+    * assigns against those collected rows); stage the encoded batch,
+    * whose write observes its row count and cells; read the live (and
+    * pending) vec_ids of only those cells (a static `cell IN (…)`
+    * partition filter) for the idempotence anti-join; stage the fresh
+    * rows, whose write observes the count to return and the cells to
+    * rewrite; write the touched cells' old ∪ new rows to the store on
+    * up to one task per core, reusing the opened live codes frame;
+    * flip the pointer and vacuum at file granularity. A warm commit
+    * runs at most 12 Spark jobs and a full replay, which stops after
+    * the second staging and publishes nothing, at most 9
+    * (`IngestCommitSpec`).
     *
     * VERSION-CHURN COALESCING (r18 verdict item 5): one manifest
     * version per micro-batch means production batch rates grow the
@@ -726,14 +744,6 @@ object Streams {
     // advances after this batch lands), not per batch.
     val liveEpoch = IndexManifest.epochOf(spark, live)
     val epochMoved = !annIngestMarkerEpoch(spark, root).contains(liveEpoch)
-    val newCodes = Scratch.stageReuse(
-      Pq.encodeAgainst(index, batch, 0), "ann_ingest_atomic_codes")
-    val cells = newCodes.select("cell").distinct()
-    val liveIds =
-      if (epochMoved) index.codes.select("vec_id")
-      else index.codes
-        .join(broadcast(cells), Seq("cell"), "left_semi")
-        .select("vec_id")
     // the claim registry is live ∪ pending: a replayed batch whose
     // rows already wait in pending must not re-append them. Pending
     // rows are BY CONSTRUCTION encoded under the live epoch (the
@@ -756,54 +766,75 @@ object Streams {
           "tree (if every pending vec_id is already live — the crash-" +
           "between-flush-and-clear case — clearing alone is safe).")
     }
-    val pendingIds = pendingDf
-      .map(_.join(broadcast(cells), Seq("cell"), "left_semi").select("vec_id"))
-      .getOrElse(liveIds.limit(0))
-    val fresh = newCodes.join(liveIds.unionByName(pendingIds),
-      Seq("vec_id"), "left_anti")
-    // no isEmpty pre-check: it would EXECUTE the anti-join (whose
-    // semi-join build side scans the live cells) once for the probe
-    // and again for the staging — both branches below stage first and
-    // read emptiness off the materialized count (a replayed batch
-    // stages an empty frame, appends nothing, publishes nothing)
+    // the encode is staged ONCE, per call (two sinks may run
+    // concurrently), and its write observes the batch's cells: the
+    // claim reads prune to them statically (`cell IN (…)`)
+    val newCodes = Scratch.stageObserved(
+      Pq.encodeAgainst(index, batch, 0), "ann_ingest_atomic_codes", "cell")
     val appended =
-      if (publishEveryRows <= 0L)
-        // requireEpoch closes the fence's last window (r20): a retrain
-        // that publishes between this batch's encode (against `live`'s
-        // centroids/codebooks) and the pointer flip would otherwise
-        // land these rows on the retrained tree at stale cells — the
-        // epoch-pinned publish fails loudly instead and the stream's
-        // replay re-encodes against the fresh version
-        IndexManifest.appendRowsAtomic(spark, root, "codes", "cell", fresh,
-          keep, requireEpoch = Some(liveEpoch))
-      else {
-        val staged = Scratch.stageReuse(fresh, "ann_ingest_pending_batch")
-        val n = staged.count()
-        if (n > 0L) {
-          // stamp the epoch BEFORE the rows land: a crash between the
-          // two leaves a stamped-but-row-less tree (reads as "no
-          // pending"), while the reverse order would leave rows whose
-          // absent stamp reads as epoch 0 and false-trips the fence
-          // guards above. Idempotent: the guard above proved any
-          // existing stamp already equals liveEpoch. (`_`-files are
-          // invisible to the tree's parquet readers.)
-          val pendingP = new org.apache.hadoop.fs.Path(annPendingPath(root))
-          pendingP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .mkdirs(pendingP)
-          IndexManifest.writeEpoch(spark, annPendingPath(root), liveEpoch)
-          staged.repartition(col("cell"))
-            .write.mode("append").partitionBy("cell")
-            .parquet(annPendingPath(root))
-        }
-        val pendingRows = readLakeOpt(spark, annPendingPath(root))
-          .map(_.count()).getOrElse(0L)
-        if (pendingRows >= publishEveryRows) annIngestFlushPending(spark, root, keep)
-        n
-      }
+      try {
+        def idsInCells(df: DataFrame): DataFrame =
+          df.filter(col("cell").isInCollection(newCodes.keys.toSeq)).select("vec_id")
+        val liveIds =
+          if (epochMoved) index.codes.select("vec_id") else idsInCells(index.codes)
+        val claimed = pendingDf.map(p => liveIds.unionByName(idsInCells(p)))
+          .getOrElse(liveIds)
+        val fresh = newCodes.scan.join(claimed, Seq("vec_id"), "left_anti")
+        // no isEmpty pre-check: it would EXECUTE the anti-join once for
+        // the probe and again for the staging — both branches stage
+        // first and read emptiness off the observed count (a replayed
+        // batch stages an empty frame, appends nothing, publishes nothing)
+        if (publishEveryRows <= 0L)
+          // the publish is pinned to `live`'s epoch, which closes the
+          // fence's last window (r20): a retrain that publishes between
+          // this batch's encode (against `live`'s centroids/codebooks)
+          // and the pointer flip would otherwise land these rows on the
+          // retrained tree at stale cells — the publish fails loudly
+          // instead and the stream's replay re-encodes against the
+          // fresh version. `index.codes` is the live tree the claim
+          // check read: the publish reuses it instead of listing the
+          // version again
+          IndexManifest.appendRowsAtomic(spark, root, live, index.codes,
+            "codes", "cell", fresh, keep)
+        else annIngestPend(spark, root, fresh, liveEpoch, keep, publishEveryRows)
+      } finally Scratch.release(newCodes.path)
     // marker advance AFTER the landing: a crash in between re-runs the
     // full-tree claim on the next batch — slower, never duplicating
     if (epochMoved) annIngestWriteMarker(spark, root, liveEpoch)
     appended
+  }
+
+  /** The coalesced branch of [[annIngestMicroBatchAtomic]]: land the
+    * claim-checked `fresh` rows in the durable pending tree, and flush
+    * it as one version once it holds `publishEveryRows`. Returns the
+    * rows landed. */
+  private def annIngestPend(spark: SparkSession, root: String, fresh: DataFrame,
+                            liveEpoch: Long, keep: Int,
+                            publishEveryRows: Long): Long = {
+    import graft.operators.{IndexManifest, Scratch}
+    val staged = Scratch.stageObserved(fresh, "ann_ingest_pending_batch", "cell")
+    try {
+      if (staged.rows > 0L) {
+        // stamp the epoch BEFORE the rows land: a crash between the
+        // two leaves a stamped-but-row-less tree (reads as "no
+        // pending"), while the reverse order would leave rows whose
+        // absent stamp reads as epoch 0 and false-trips the fence
+        // guards of the caller. Idempotent: the caller proved any
+        // existing stamp already equals liveEpoch. (`_`-files are
+        // invisible to the tree's parquet readers.)
+        val pendingP = new org.apache.hadoop.fs.Path(annPendingPath(root))
+        pendingP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .mkdirs(pendingP)
+        IndexManifest.writeEpoch(spark, annPendingPath(root), liveEpoch)
+        staged.scan.repartition(col("cell"))
+          .write.mode("append").partitionBy("cell")
+          .parquet(annPendingPath(root))
+      }
+      val pendingRows = readLakeOpt(spark, annPendingPath(root))
+        .map(_.count()).getOrElse(0L)
+      if (pendingRows >= publishEveryRows) annIngestFlushPending(spark, root, keep)
+      staged.rows
+    } finally Scratch.release(staged.path)
   }
 
   /** Publish the coalesced sink's pending delta as ONE manifest
@@ -840,6 +871,7 @@ object Streams {
         s"at epoch $liveEpoch — re-ingest them from source instead of " +
         "flushing (see annIngestMicroBatchAtomic's fence scaladoc).")
     val liveCodes = Pq.readIvfPqIndex(spark, live).codes
+    // cells unknown without a scan of pending: a broadcast semi-join
     val cells = pendingDf.select("cell").distinct()
     val dupIds = liveCodes
       .join(broadcast(cells), Seq("cell"), "left_semi")
@@ -850,9 +882,8 @@ object Streams {
     // epoch pin holds the fence through the publish itself: a retrain
     // landing after the check above would otherwise still receive
     // these stale-encoded rows.
-    val n = IndexManifest.appendRowsAtomic(spark, root, "codes", "cell",
-      pendingDf.join(dupIds, Seq("vec_id"), "left_anti"), keep,
-      requireEpoch = Some(liveEpoch))
+    val n = IndexManifest.appendRowsAtomic(spark, root, live, liveCodes,
+      "codes", "cell", pendingDf.join(dupIds, Seq("vec_id"), "left_anti"), keep)
     // clear AFTER the publish: a crash before this line leaves pending
     // intact (durable, replay-safe); one after it has already published
     val p = new org.apache.hadoop.fs.Path(annPendingPath(root))
